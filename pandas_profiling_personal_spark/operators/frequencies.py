@@ -8,6 +8,11 @@ map-side partial aggregation compresses each partition to its distinct values be
 the exchange, so the explode factor never hits the wire. Per-column helpers are also
 provided for single-column use.
 
+The profile's pass 2 (:func:`frequency_summary`) is one linear plan of three
+exchanges: the ``(column, value)`` counts, one salted ``(column, __salt)``
+window phase and one ``(column)`` window phase, which rank the top-K and both
+extreme ends side by side (:func:`_topk_extremes_linear`).
+
 Unique-value semantics: ``n_unique`` = number of values occurring exactly once —
 the reference's Spark backend gets this wrong (``dropDuplicates().count()``, which
 is just distinct count; reference: series_wrappers.py:170-171). We implement the
@@ -216,7 +221,7 @@ def extreme_counts(
     return mins.unionByName(maxs)
 
 
-def _topk_extremes_fused(
+def _topk_extremes_linear(
     vc: DataFrame,
     k: int,
     n: int,
@@ -224,117 +229,118 @@ def _topk_extremes_fused(
     ext_cols: list[str],
     salt_buckets: int = 64,
 ) -> DataFrame:
-    """:func:`top_k_with_totals` and :func:`extreme_counts` as TWO branches
-    of ONE plan over the SAME salted exchange, so the (column, value)
-    frequency table is shuffled once — not once per job (r14, guide §2.4).
+    """:func:`top_k_with_totals` and :func:`extreme_counts` as ONE linear
+    plan without branches: after the ``(column, value)`` count exchange
+    come one salted ``(column, __salt)`` exchange and one ``(column)``
+    exchange, three shuffles in all whatever ``spark.sql.exchange.reuse``
+    says (plan-gated in
+    test_plan_quality.py::test_pass2_one_linear_exchange_chain).
 
-    Both branches window over identical ``hashpartitioning(column,
-    __salt)`` children, so Catalyst's ReuseExchange executes the melt ->
-    count shuffle and the salted exchange ONCE (plan-gated in
-    test_plan_quality). Equivalence with the two-job path (pinned by
-    test_semantics.py::test_fused_pass2_matches_two_job_path):
+    Each phase stacks two Window operators on the SAME partitioning, so
+    the second costs a sort and no exchange: ``count desc, value asc`` for
+    the top-K plus the distinct/unique totals, and value order for the
+    extremes. Rows that may not rank as extremes (a column outside
+    ``ext_cols``, NaN in a numeric column) sort after every rankable row,
+    so the rankable rows take ranks ``1..c_ok`` exactly as after
+    :func:`extreme_counts`' pre-filter, and the max end is the reversal
+    ``c_ok - r + 1`` of the same ascending pass.
 
-    * top-k + totals: branch T is literally the :func:`top_k_with_totals`
-      pipeline; the extreme branch never feeds it.
-    * extremes: instead of PRE-filtering NaN rows and non-extreme columns
-      (which would change the exchange and break reuse), branch E ranks
-      everything and reproduces the filter inside the window arithmetic —
-      NaN sorts above every finite double in Spark's asc order, so the
-      non-NaN rows occupy ranks 1..count(non-NaN) exactly as they would
-      after the pre-filter; the survivor predicate adds ``NOT isnan`` and
-      the extreme-column membership. Output: one long frame, ``end`` in
-      ('top', 'min', 'max'); 'top' rows carry the exact totals.
+    Phase 1 keeps the rows inside any of the three bounds of their salt
+    group. A row's rank in its group never exceeds its rank in the column,
+    so the survivors hold every true top-K and extreme row, and every row
+    ranked above a kept row is kept too: the phase-2 ranks over the
+    survivors are exact for the rows emitted (pinned against the two-job
+    reference in test_semantics.py::test_fused_pass2_matches_two_job_path
+    and its Hypothesis twin).
+
+    Output: ``(column, value, count, rank, n_distinct, n_unique, min_rank,
+    max_rank)`` for the rows inside any bound; a rank is null outside its
+    bound, and every row carries its column's exact totals.
     """
-    num_set = set(numeric_cols)
-    ext_set = set(ext_cols)
-    in_num = (
-        F.col("column").isin(*num_set) if num_set else F.lit(False)
-    )
-    base = (
-        vc.withColumn("__salt", F.abs(F.hash("value")) % salt_buckets)
-        .withColumn(
-            "__num", F.when(in_num, F.col("value").cast("double"))
-        )
-        .withColumn(
-            "__nan",
-            F.coalesce(
-                F.isnan(F.col("value").try_cast("double")), F.lit(False)
-            )
-            & in_num,
-        )
-    )
-    # branch T — top_k_with_totals verbatim over the shared exchange
-    salted_top = Window.partitionBy("column", "__salt").orderBy(
-        F.desc("count"), F.asc("value")
-    )
-    salted_all = Window.partitionBy("column", "__salt")
-    final_top = Window.partitionBy("column").orderBy(
-        F.desc("count"), F.asc("value")
-    )
-    final_all = Window.partitionBy("column")
-    tops = (
-        base.withColumn("__r1", F.row_number().over(salted_top))
-        .withColumn("__pd", F.count(F.lit(1)).over(salted_all))
-        .withColumn(
-            "__pu",
-            F.sum(F.when(F.col("count") == 1, 1).otherwise(0)).over(salted_all),
-        )
-        .where(F.col("__r1") <= k)
-        .withColumn("rank", F.row_number().over(final_top))
-        .withColumn(
-            "n_distinct",
-            F.sum(F.when(F.col("__r1") == 1, F.col("__pd"))).over(final_all),
-        )
-        .withColumn(
-            "n_unique",
-            F.coalesce(
-                F.sum(F.when(F.col("__r1") == 1, F.col("__pu"))).over(final_all),
-                F.lit(0),
-            ),
-        )
-        .where(F.col("rank") <= k)
-        .select(
-            "column", "value", "count", F.lit("top").alias("end"), "rank",
-            "n_distinct", "n_unique",
-        )
-    )
-    if not ext_set or n <= 0:
-        return tops
-    # branch E — extreme_counts with the pre-filters folded into the
-    # window arithmetic (NaN-last ordering + non-NaN count bounds)
-    order = [F.asc("__num"), F.asc("value")]
-    salted_ext = Window.partitionBy("column", "__salt").orderBy(*order)
-    e1 = (
-        base.withColumn("__r1", F.row_number().over(salted_ext))
-        .withColumn(
-            "__cok", F.sum((~F.col("__nan")).cast("int")).over(salted_all)
-        )
-        .where(
+    ext_set = set(ext_cols) if n > 0 else set()
+    whole = (Window.unboundedPreceding, Window.unboundedFollowing)
+    s = vc.withColumn("__salt", F.pmod(F.hash("value"), F.lit(salt_buckets)))
+    if ext_set:
+        num_set = set(numeric_cols)
+        as_double = F.col("value").try_cast("double")
+        in_num = F.col("column").isin(*num_set) if num_set else F.lit(False)
+        s = s.withColumn("__num", F.when(in_num, as_double)).withColumn(
+            "__ok",
             F.col("column").isin(*ext_set)
-            & ~F.col("__nan")
-            & (
-                (F.col("__r1") <= n)
-                | (F.col("__r1") > F.col("__cok") - n)
-            )
+            & ~(in_num & F.coalesce(F.isnan(as_double), F.lit(False))),
         )
+
+    def ranks(part: list[str], r: str, e: str, c: str):
+        """Top-order row number ``r`` and, with extremes, value-order row
+        number ``e`` and rankable-row count ``c`` over ``part``. Every
+        whole-partition aggregate shares its ranking spec, so one select
+        plans one Window operator (one sort) per order."""
+        top = Window.partitionBy(*part).orderBy(
+            F.desc("count"), F.asc("value")
+        )
+        cols = [F.row_number().over(top).alias(r)]
+        if ext_set:
+            ext = Window.partitionBy(*part).orderBy(
+                F.desc("__ok"), F.asc("__num"), F.asc("value")
+            )
+            cols += [
+                F.row_number().over(ext).alias(e),
+                F.sum(F.col("__ok").cast("int"))
+                .over(ext.rowsBetween(*whole))
+                .alias(c),
+            ]
+        return top.rowsBetween(*whole), cols
+
+    # phase 1: per (column, salt) group, with partial distinct/unique totals
+    top_all, cols = ranks(["column", "__salt"], "__r1", "__e1", "__c1")
+    s = s.select(
+        "*",
+        *cols,
+        F.count(F.lit(1)).over(top_all).alias("__pd"),
+        F.sum((F.col("count") == 1).cast("int")).over(top_all).alias("__pu"),
     )
-    final_ext = Window.partitionBy("column").orderBy(*order)
-    both = e1.withColumn("__r2", F.row_number().over(final_ext)).withColumn(
-        "__c2", F.count(F.lit(1)).over(final_all)
+    keep = F.col("__r1") <= k
+    if ext_set:
+        keep = keep | (
+            F.col("__ok")
+            & ((F.col("__e1") <= n) | (F.col("__e1") > F.col("__c1") - n))
+        )
+    # phase 2: per column over the survivors. Every non-empty salt group
+    # keeps its top-order rank-1 row (k >= 1), so summing those rows'
+    # partials gives the exact column totals.
+    top_all, cols = ranks(["column"], "__r2", "__e2", "__c2")
+    first = F.col("__r1") == 1
+    s = s.where(keep).select(
+        "*",
+        *cols,
+        F.sum(F.when(first, F.col("__pd"))).over(top_all).alias("n_distinct"),
+        F.coalesce(
+            F.sum(F.when(first, F.col("__pu"))).over(top_all), F.lit(0)
+        ).alias("n_unique"),
     )
-    mins = both.where(F.col("__r2") <= n).select(
-        "column", "value", "count", F.lit("min").alias("end"),
-        F.col("__r2").alias("rank"),
-        F.lit(None).cast("long").alias("n_distinct"),
-        F.lit(None).cast("long").alias("n_unique"),
+    rank = F.when(F.col("__r2") <= k, F.col("__r2"))
+    if ext_set:
+        min_rank = F.when(F.col("__ok") & (F.col("__e2") <= n), F.col("__e2"))
+        max_rank = F.when(
+            F.col("__ok") & (F.col("__e2") > F.col("__c2") - n),
+            (F.col("__c2") - F.col("__e2") + 1).cast("int"),
+        )
+    else:
+        min_rank = max_rank = F.lit(None).cast("int")
+    return s.select(
+        "column", "value", "count", rank.alias("rank"), "n_distinct",
+        "n_unique", min_rank.alias("min_rank"), max_rank.alias("max_rank"),
+    ).where(
+        F.col("rank").isNotNull()
+        | F.col("min_rank").isNotNull()
+        | F.col("max_rank").isNotNull()
     )
-    maxs = both.where(F.col("__r2") > F.col("__c2") - n).select(
-        "column", "value", "count", F.lit("max").alias("end"),
-        (F.col("__c2") - F.col("__r2") + 1).alias("rank"),
-        F.lit(None).cast("long").alias("n_distinct"),
-        F.lit(None).cast("long").alias("n_unique"),
-    )
-    return tops.unionByName(mins).unionByName(maxs)
+
+
+def _by_rank(
+    ranked: list[tuple[int, tuple[str, int]]],
+) -> list[tuple[str, int]]:
+    return [pair for _, pair in sorted(ranked, key=lambda t: t[0])]
 
 
 def frequency_summary(
@@ -351,91 +357,51 @@ def frequency_summary(
 ]:
     """Driver-side convenience: per column, exact ``n_distinct``/``n_unique``,
     the top-K value list, and (when ``n_extreme`` > 0) the bottom/top-``n_extreme``
-    values by magnitude — all off ONE raw-table scan, in ONE action (r14:
-    the top-k and extreme branches share their exchanges via runtime
-    ReuseExchange, so the frequency table is shuffled once).
+    values by magnitude — all off ONE raw-table scan, in ONE action whose
+    plan is a single chain of three exchanges: the melted ``(column,
+    value)`` counts, the salted ``(column, __salt)`` phase and the
+    ``(column)`` phase (:func:`_topk_extremes_linear`). The frequency
+    table is shuffled once, with no branch that would need exchange reuse
+    or a persist to avoid recomputing it.
 
     ``extreme_cols`` semantics: ``None`` means rank every column; an empty list
-    means the caller has no rankable (numeric/datetime) columns, so the extremes
-    job is skipped entirely rather than ranking every categorical column and
-    discarding the result.
+    means the caller has no rankable (numeric/datetime) columns, so no
+    extreme ranking runs at all rather than ranking every categorical
+    column and discarding the result.
 
     Returns ``({column: {n_distinct, n_unique}},
     {column: [(value, count), ...]},
     {column: {'min': [(value, count), ...], 'max': [...]}})``.
     """
     columns = df.columns if columns is None else columns
-    # ONE raw-table scan producing the per-column counts, then ONE action:
-    # the salted two-phase top-K (exact distinct/unique totals riding its
-    # window shuffles) and the extreme-observation ranks run as two
-    # branches over the SAME salted exchange (ReuseExchange), so the
-    # frequency table is shuffled once — not once per job — and needs no
-    # persist (r14; the two-job path equivalence is pinned in
-    # test_semantics.py).
-    #
-    # Runtime guard (VERDICT r14 #4): the fusion's entire premise is
-    # exchange reuse — with ``spark.sql.exchange.reuse=false`` the
-    # un-persisted frequency table would be computed once PER BRANCH,
-    # strictly worse than the persist+two-job shape. Detect that
-    # configuration up front and fall back (bit-equal output both ways,
-    # pinned by test_semantics.py::test_fused_pass2_fallback_without_reuse).
-    skip_extremes = extreme_cols is not None and len(extreme_cols) == 0
-    want_ext = n_extreme > 0 and not skip_extremes
-    try:
-        _reuse_ok = (
-            str(
-                df.sparkSession.conf.get("spark.sql.exchange.reuse", "true")
-            ).lower()
-            == "true"
-        )
-    except Exception:
-        _reuse_ok = True
-    if not _reuse_ok and want_ext:
-        # persist + two jobs: the pre-r14 shape (one extra cache
-        # materialization, but each branch reads the counts once)
-        from pyspark import StorageLevel
-
-        vc = value_counts_all(df, columns).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            top_rows = top_k_with_totals(vc, k).collect()
-            evc = (
-                vc.where(F.col("column").isin(*extreme_cols))
-                if extreme_cols
-                else vc
-            )
-            ext_rows = extreme_counts(
-                evc, n_extreme, extreme_numeric or []
-            ).collect()
-        finally:
-            vc.unpersist()
-    else:
-        vc = value_counts_all(df, columns)
-        fused = _topk_extremes_fused(
-            vc, k, n_extreme if want_ext else 0,
-            extreme_numeric or [],
-            (extreme_cols if extreme_cols is not None else columns)
-            if want_ext else [],
-        )
-        all_rows = fused.collect()
-        top_rows = [r for r in all_rows if r["end"] == "top"]
-        ext_rows = [r for r in all_rows if r["end"] != "top"]
+    ext_cols = columns if extreme_cols is None else extreme_cols
+    rows = _topk_extremes_linear(
+        value_counts_all(df, columns), k, n_extreme, extreme_numeric or [],
+        ext_cols,
+    ).collect()
     scalars: dict[str, dict] = {
         c: {"n_distinct": 0, "n_unique": 0} for c in columns
     }
-    tops: dict[str, list[tuple[str, int]]] = {c: [] for c in columns}
-    for r in sorted(top_rows, key=lambda r: (r["column"], r["rank"])):
-        tops[r["column"]].append((r["value"], r["count"]))
-        scalars[r["column"]] = {
-            "n_distinct": r["n_distinct"],
-            "n_unique": r["n_unique"],
-        }
-    extremes: dict[str, dict[str, list[tuple[str, int]]]] = {}
-    for r in sorted(ext_rows, key=lambda r: (r["column"], r["end"], r["rank"])):
-        extremes.setdefault(r["column"], {"min": [], "max": []})[r["end"]].append(
-            (r["value"], r["count"])
-        )
+    ranked_tops: dict[str, list] = {c: [] for c in columns}
+    ranked_ext: dict[str, dict[str, list]] = {}
+    for r in sorted(rows, key=lambda r: r["column"]):
+        c, pair = r["column"], (r["value"], r["count"])
+        if r["rank"] is not None:
+            ranked_tops[c].append((r["rank"], pair))
+            scalars[c] = {
+                "n_distinct": r["n_distinct"],
+                "n_unique": r["n_unique"],
+            }
+        for end in ("min", "max"):
+            if r[end + "_rank"] is not None:
+                ranked_ext.setdefault(c, {"min": [], "max": []})[end].append(
+                    (r[end + "_rank"], pair)
+                )
+    tops = {c: _by_rank(ranked) for c, ranked in ranked_tops.items()}
+    extremes = {
+        c: {end: _by_rank(ranked) for end, ranked in ends.items()}
+        for c, ends in ranked_ext.items()
+    }
     return scalars, tops, extremes
 
 

@@ -82,19 +82,23 @@ def _collect_agg_groups(
         return df.selectExpr(*groups[0]).collect()[0].asDict()
     from concurrent.futures import ThreadPoolExecutor
 
-    sc = df.sparkSession.sparkContext
-    desc = sc.getLocalProperty("spark.job.description")
+    from pyspark import inheritable_thread_target
 
     def run(fs: "list[str]") -> "dict[str, Any]":
-        # job descriptions are thread-local (guide §1.5) — re-label so the
-        # batch jobs stay attributable in the UI
-        if desc:
-            sc.setJobDescription(desc)
         return df.selectExpr(*fs).collect()[0].asDict()
 
+    # job group, description, cancel flag and tags are thread-local: the
+    # pool threads take the caller's, so the batch jobs stay attributable
+    # and cancelJobGroup reaches them. Wrapped once per task: the wrapper
+    # copies the properties once, and each concurrent query writes its own
+    # SQL execution id into them, so tasks must not share one copy.
     with ThreadPoolExecutor(max_workers=len(groups)) as ex:
-        for d in ex.map(run, groups):
-            row.update(d)
+        futs = [
+            ex.submit(inheritable_thread_target(df.sparkSession)(run), fs)
+            for fs in groups
+        ]
+        for f in futs:
+            row.update(f.result())
     return row
 
 
@@ -256,20 +260,20 @@ def scalar_summary(
     # The exact tier keeps the single action — its count(DISTINCT) Expand
     # is the oracle-tier shape, deliberately untouched.
     groups = _agg_batches(df, frags) if not config.exact else [frags]
-    if len(groups) > 1 and sketch_frags:
+    sketch_groups = _agg_batches(df, sketch_frags) if sketch_frags else []
+    if len(groups) > 1 or len(sketch_groups) > 1:
         # the sketch action is independent of the declarative batches —
         # it joins the same pool instead of serializing after them, and
-        # very wide sketch lists split the same way (the one-operator
+        # very wide sketch lists split the same way, also when the
+        # declarative list alone stays under the cap (the one-operator
         # imperative update cost degrades with width exactly like the
         # declarative agg: wide100 sketch action 4.2 s as one job,
         # 1.9-2.1 s as 4 concurrent batches)
-        row = _collect_agg_groups(
-            df, groups + _agg_batches(df, sketch_frags)
-        )
+        row = _collect_agg_groups(df, groups + sketch_groups)
     else:
         row = _collect_agg_groups(df, groups)
-        if sketch_frags:
-            row.update(df.selectExpr(*sketch_frags).collect()[0].asDict())
+        for fs in sketch_groups:
+            row.update(df.selectExpr(*fs).collect()[0].asDict())
     if extra_cols:
         row.update(df.agg(*extra_cols).collect()[0].asDict())
     _moment_pass(df, types, row)

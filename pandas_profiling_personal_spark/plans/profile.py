@@ -7,7 +7,8 @@ but with a constant number of Spark jobs:
 
   pass 1  one wide ``df.agg``: every scalar stat for every column,
           with the full Pearson pair list folded in                 (summary.py)
-  pass 2  one melt+groupBy: value counts / distinct / unique / topK (frequencies.py)
+  pass 2  one melt+groupBy: value counts / distinct / unique / topK /
+          extremes, one linear chain of three exchanges           (frequencies.py)
   pass 3  one explode+groupBy: all numeric+datetime histograms      (histogram.py)
   pass 4  one ``df.agg``: MAD for all numeric columns, with nullity
           correlations piggybacked for the null-bearing columns     (summary.py)
@@ -358,8 +359,11 @@ def profile(
         fetch_k = min(
             max(cfg.top_k, cfg.cardinality_threshold + 1), cfg.driver_value_limit
         )
-        # extreme observations (K5) ride the same cached value-counts exchange:
-        # numeric columns rank on the cast value, datetimes lexically (ISO order)
+        # extreme observations (K5) ride the same action and exchanges as the
+        # top-K: one (column, value) count exchange, then the salted and
+        # per-column window phases rank both orders (frequency_summary).
+        # Numeric columns rank on the cast value, datetimes lexically (ISO
+        # order)
         ext_cols = [
             c
             for c, vt in types.items()

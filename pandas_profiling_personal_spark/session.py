@@ -19,7 +19,7 @@ def get_session(
     # OOMs on wide aggregations; size generously (only applies if this call
     # actually creates the JVM).
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-    return (
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.driver.memory", driver_mem)
@@ -56,3 +56,8 @@ def get_session(
         .config("spark.sql.ansi.enabled", "false")
         .getOrCreate()
     )
+    # set again on the session itself: a builder may hand back an existing
+    # session without applying its options, and pass 1's batch size
+    # (_WIDE_AGG_FIELD_CAP) assumes this cap
+    spark.conf.set("spark.sql.codegen.maxFields", "320")
+    return spark

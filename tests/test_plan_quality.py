@@ -203,8 +203,10 @@ def test_wide_profile_constant_job_count(spark):
     it — compared here at 96 vs 192 columns, both fully batched (pass-1a
     and the moment pass each cross _WIDE_AGG_FIELD_CAP at both widths)."""
     import random
+    import time
 
     from pandas_profiling_personal_spark import ProfileConfig, profile
+    from pandas_profiling_personal_spark.operators import summary as SU
 
     rng = random.Random(9)
 
@@ -219,19 +221,72 @@ def test_wide_profile_constant_job_count(spark):
 
     cfg = ProfileConfig(correlations=(), duplicates=False, missing_diagrams=False)
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def fence(group):
+        # one tiny job in its own group; the status store is fed by a FIFO
+        # listener bus, so once it lists this job it lists every job
+        # submitted before it. Returns the fence job's id.
+        sc.setJobGroup(group, "status-store fence")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setJobGroup(None, None)
+        deadline = time.monotonic() + 60
+        while not (ids := tracker.getJobIdsForGroup(group)):
+            assert time.monotonic() < deadline, f"{group} never listed"
+            time.sleep(0.05)
+        return ids[0]
+
     jobs = {}
     for n_cols in (96, 192):
+        lo = fence(f"wide-{n_cols}-before")
         sc.setJobGroup(f"wide-{n_cols}", "wide profile job growth")
         try:
             r = profile(frame(n_cols), cfg)
         finally:
             sc.setJobGroup(None, None)
+        hi = fence(f"wide-{n_cols}-after")
         assert len(r.variables) == n_cols
-        jobs[n_cols] = len(
-            sc.statusTracker().getJobIdsForGroup(f"wide-{n_cols}")
-        )
+        jobs[n_cols] = len(tracker.getJobIdsForGroup(f"wide-{n_cols}"))
+        # every job of the profile, the pass-1 batch jobs run from a
+        # thread pool included, lands in the caller's job group — else
+        # the count below cannot see them and cancelJobGroup misses them
+        escaped = [j for j in tracker.getJobIdsForGroup() if lo < j < hi]
+        assert not escaped, f"jobs outside the caller's group: {escaped}"
+    assert jobs[192] >= SU._WIDE_AGG_BATCHES, jobs
     # identical pass structure; allow +2 for AQE sub-job variance
     assert jobs[192] <= jobs[96] + 2, f"job growth with width: {jobs}"
+
+
+def test_get_session_sets_codegen_cap_on_existing_session(spark):
+    """get_session on a JVM that already has a plain session must still
+    leave spark.sql.codegen.maxFields=320 — the cap the pass-1 batch size
+    (_WIDE_AGG_FIELD_CAP) is sized to; a builder may return the existing
+    session without applying its options."""
+    from pandas_profiling_personal_spark.session import get_session
+
+    keys = (
+        "spark.sql.codegen.maxFields",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.session.timeZone",
+        "spark.sql.execution.arrow.pyspark.enabled",
+        "spark.sql.ansi.enabled",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.set("spark.sql.codegen.maxFields", "100")
+    try:
+        s = get_session()
+        assert s is spark
+        assert s.conf.get("spark.sql.codegen.maxFields") == "320"
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_freq_near_unique_gate(spark):
@@ -878,20 +933,37 @@ def test_spearman_raw_default_is_scale_safe(spark, monkeypatch):
     assert out == {("a", "b"): 1.0}
 
 
-def test_fused_pass2_reuses_exchanges(spark):
-    """r14: the fused top-k/extremes plan must share the melt->count and
-    salted exchanges between its branches (ReusedExchange) — losing the
-    reuse silently doubles pass 2's shuffle volume at scale."""
+def test_pass2_one_linear_exchange_chain(spark):
+    """Pass 2 on a profile-shaped call (k=51, n_extreme=10, categorical
+    frequency columns that are NOT extreme columns) must shuffle the
+    frequency table ONCE with no exchange reuse to lean on: the final plan
+    holds exactly one (column, value) exchange, at most three shuffle
+    exchanges in all, and no Union. The r14 top/min/max union passed a
+    looser "ReusedExchange somewhere" check while its branches' exchanges
+    stopped matching (Catalyst pushed the extreme filter below the
+    aggregate), so the table was counted and shuffled three times."""
+    import re
+
     from pandas_profiling_personal_spark.operators import frequencies as FQ
 
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     num = ["l_quantity", "l_extendedprice"]
-    vc = FQ.value_counts_all(df, num + ["l_returnflag"])
-    fused = FQ._topk_extremes_fused(vc, 5, 3, num, num)
-    fused.collect()  # AQE decides exchange reuse at runtime: read the FINAL plan
-    plan = _plan(fused)
+    ext = num + ["l_shipdate"]
+    vc = FQ.value_counts_all(df, ext + ["l_returnflag", "l_linestatus"])
+    q = FQ._topk_extremes_linear(vc, 51, 10, num, ext)
+    q.collect()  # AQE settles the plan at runtime: read the FINAL plan
+    plan = q._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
     assert "isFinalPlan=true" in plan, plan[:500]
-    assert "ReusedExchange" in plan, plan[:3000]
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(
+        re.findall(r"Exchange hashpartitioning\(column#\d+, value#", final)
+    ) == 1, final
+    assert len(re.findall(r"(?<!Broadcast)Exchange \w", final)) <= 3, final
+    assert "Union" not in final, final
 
 
 def test_engine_joins_shj_hinted_user_joins_default(spark):

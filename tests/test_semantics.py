@@ -3,9 +3,11 @@ uniqueness/distinct, value-counts edges, numeric edge families, type inference.
 These pin exactly the semantics the reference's Spark backend got WRONG
 (n_unique == n_distinct bug, duplicate-count == 0 bug)."""
 
+import datetime
 import math
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F, types as T
 
 from pandas_profiling_personal_spark import ProfileConfig, profile
@@ -1111,11 +1113,44 @@ def test_relevance_target_profile_section(spark):
     assert r3.variables  # the rest of the profile survived
 
 
+def _pass2_both(vc, k, n, num, ext, salt_buckets=64):
+    """(reference, linear) pass-2 outputs as sorted ``(top rows, extreme
+    rows)``: the two-job reference is :func:`FQ.top_k_with_totals` plus
+    :func:`FQ.extreme_counts` on the extreme columns."""
+    ref_top = sorted(
+        (r["column"], r["rank"], r["value"], r["count"],
+         r["n_distinct"], r["n_unique"])
+        for r in FQ.top_k_with_totals(vc, k, salt_buckets).collect()
+    )
+    ref_ext = sorted(
+        (r["column"], r["end"], r["rank"], r["value"], r["count"])
+        for r in FQ.extreme_counts(
+            vc.where(F.col("column").isin(*ext)), n, num, salt_buckets
+        ).collect()
+    ) if ext else []
+    rows = FQ._topk_extremes_linear(
+        vc, k, n, num, ext, salt_buckets
+    ).collect()
+    new_top = sorted(
+        (r["column"], r["rank"], r["value"], r["count"],
+         r["n_distinct"], r["n_unique"])
+        for r in rows if r["rank"] is not None
+    )
+    new_ext = sorted(
+        (r["column"], end, r[end + "_rank"], r["value"], r["count"])
+        for r in rows
+        for end in ("min", "max")
+        if r[end + "_rank"] is not None
+    )
+    return (ref_top, ref_ext), (new_top, new_ext)
+
+
 def test_fused_pass2_matches_two_job_path(spark):
-    """r14: pass 2 runs top-k/totals and extremes as two branches of ONE
-    plan over a shared salted exchange. The fused path must reproduce the
-    two-job path bit-for-bit on NaN, nulls, count ties and datetimes —
-    including NaN exclusion from numeric extremes."""
+    """Pass 2 runs top-k/totals and extremes as ONE linear plan (three
+    exchanges, no branches). It must reproduce the two-job path
+    bit-for-bit on NaN, nulls, count ties and datetimes — including NaN
+    exclusion from numeric extremes, and a non-extreme column (``s``)
+    whose rows must never rank as extremes."""
     import datetime as dt
 
     rows = [
@@ -1130,33 +1165,76 @@ def test_fused_pass2_matches_two_job_path(spark):
     ]
     df = spark.createDataFrame(rows, "x double, s string, d date")
     vc = FQ.value_counts_all(df, ["x", "s", "d"])
-    k, n = 2, 2
     num, ext = ["x"], ["x", "d"]
-    old_top = sorted(
-        (r["column"], r["rank"], r["value"], r["count"],
-         r["n_distinct"], r["n_unique"])
-        for r in FQ.top_k_with_totals(vc, k).collect()
+    for k, n in ((1, 1), (2, 2), (3, 1), (10, 10)):
+        ref, new = _pass2_both(vc, k, n, num, ext)
+        assert new == ref, (k, n)
+        # NaN must not surface as a numeric extreme in either path
+        assert not any("nan" in str(v).lower() for _, _, _, v, _ in new[1])
+        assert {c for c, *_ in new[1]} <= set(ext)
+
+
+_P2_DATES = [None] + [datetime.date(2020, m, 1) for m in (1, 2, 3, 6, 12)]
+
+
+@st.composite
+def _pass2_cases(draw):
+    """Small frames built for count ties: few distinct values per column,
+    NaN and nulls in the numeric columns, an optionally all-NaN column."""
+    n_rows = draw(st.integers(0, 24))
+    x_vals = st.sampled_from(
+        [None, float("nan"), -1.5, 0.0, 1.0, 2.0, 3.0, 1e9]
     )
-    old_ext = sorted(
-        (r["column"], r["end"], r["rank"], r["value"], r["count"])
-        for r in FQ.extreme_counts(
-            vc.where(F.col("column").isin(*ext)), n, num
-        ).collect()
+    all_nan = draw(st.booleans())
+    rows = [
+        (
+            draw(x_vals),
+            float("nan") if all_nan else draw(x_vals),
+            draw(st.sampled_from([None, "", "a", "b", "c", "d"])),
+            draw(st.sampled_from(_P2_DATES)),
+            draw(st.integers(-3, 3)),
+        )
+        for _ in range(n_rows)
+    ]
+    ext = draw(
+        st.lists(st.sampled_from(["x", "y", "d", "i"]), unique=True)
     )
-    fused = FQ._topk_extremes_fused(vc, k, n, num, ext).collect()
-    new_top = sorted(
-        (r["column"], r["rank"], r["value"], r["count"],
-         r["n_distinct"], r["n_unique"])
-        for r in fused if r["end"] == "top"
+    return (
+        rows,
+        draw(st.integers(1, 6)),
+        draw(st.integers(1, 5)),
+        ext,
+        draw(st.sampled_from([1, 2, 3, 64])),
     )
-    new_ext = sorted(
-        (r["column"], r["end"], r["rank"], r["value"], r["count"])
-        for r in fused if r["end"] != "top"
+
+
+@pytest.mark.usefixtures("spark")
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=_pass2_cases())
+# every value of every column is both a top-K and an extreme row
+@example(case=([(1.0, 2.0, "a", _P2_DATES[1], 1),
+                (2.0, 2.0, "b", _P2_DATES[2], 1)], 3, 3, ["x", "d"], 1))
+# all-NaN numeric extreme column: top-K rows, no extremes
+@example(case=([(float("nan"), float("nan"), "a", None, 0)] * 3
+               + [(1.0, float("nan"), "b", None, 2)], 2, 2, ["y", "x"], 2))
+# no extreme columns at all
+@example(case=([(1.0, None, "a", _P2_DATES[3], 1)] * 2, 2, 2, [], 64))
+def test_pass2_linear_matches_two_job_path_property(spark, case):
+    """Property twin of test_fused_pass2_matches_two_job_path: over random
+    small frames and random ``k``, ``n_extreme``, extreme columns and salt
+    bucket counts (1 included), the linear pass 2 is bit-equal to the
+    two-job reference."""
+    rows, k, n, ext, salt = case
+    df = spark.createDataFrame(
+        rows, "x double, y double, s string, d date, i int"
     )
-    assert new_top == old_top
-    assert new_ext == old_ext
-    # NaN must not surface as a numeric extreme in either path
-    assert not any("nan" in str(v).lower() for _, _, _, v, _ in new_ext)
+    vc = FQ.value_counts_all(df, ["x", "y", "s", "d", "i"])
+    ref, new = _pass2_both(vc, k, n, ["x", "y", "i"], ext, salt)
+    assert new == ref
 
 
 def test_fused_pass2_fallback_without_reuse(spark):
