@@ -24,12 +24,44 @@ Estimator parity notes (reference: SURVEY.md §2.4 A6/A7):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, functions as F
 
 
 def col(name: str) -> Column:
-    """Column reference tolerant of dots/spaces in names."""
-    return F.col(f"`{name}`")
+    """Column reference tolerant of dots/spaces/backticks in names."""
+    return F.col(sq(name))
+
+
+# --- SQL-text twins ------------------------------------------------------------------
+# Hot aggregate builders (pass 1, the incremental tier, histogram_all) emit SQL
+# fragment strings applied with ONE ``df.selectExpr(*frags)``: every ``F.*`` call
+# costs several Py4J round-trips (call-site capture, conf lookups), so a
+# Column-built aggregate over a few hundred expressions spends seconds of pure
+# driver time. These helpers keep the text bit-exact with the Column builders.
+
+
+def sq(name: str) -> str:
+    """SQL identifier quoting tolerant of dots/spaces/backticks — the SQL-text
+    twin of :func:`col`."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(x: float) -> str:
+    """DOUBLE literal that round-trips ``x`` bit-exactly (``repr`` is the
+    shortest exact decimal form; the ``D`` suffix keeps Spark from reading it
+    as a DECIMAL). Non-finite values become ``double('NaN')`` /
+    ``double('Infinity')`` casts; negatives are parenthesized so the text is
+    safe after any operator (``x - -1.0D`` would be fine, ``x--1.0D`` a
+    comment)."""
+    x = float(x)
+    if math.isnan(x):
+        return "double('NaN')"
+    if math.isinf(x):
+        return "double('Infinity')" if x > 0 else "double('-Infinity')"
+    lit = f"{x!r}D"
+    return f"({lit})" if lit.startswith("-") else lit
 
 
 # --- counting ----------------------------------------------------------------------
@@ -186,6 +218,11 @@ def epoch_seconds(c: Column) -> Column:
     return F.unix_micros(c.cast("timestamp")).cast("double") / F.lit(1e6)
 
 
+def epoch_seconds_sql(q: str) -> str:
+    """SQL-text twin of :func:`epoch_seconds` over the SQL expression ``q``."""
+    return f"(cast(unix_micros(cast({q} as timestamp)) as double) / {sql_double(1e6)})"
+
+
 # --- histogram bucketing -------------------------------------------------------------
 
 
@@ -200,4 +237,15 @@ def bucket_index(c: Column, lo: Column, hi: Column, bins: int) -> Column:
         F.when(hi == lo, F.lit(0))
         .otherwise(F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1)))
         .cast("long")
+    )
+
+
+def bucket_index_sql(x: str, lo: str, hi: str, bins: int) -> str:
+    """SQL-text twin of :func:`bucket_index` over SQL expressions ``x``,
+    ``lo`` and ``hi`` (pass literals from :func:`sql_double` so the edges
+    stay bit-exact)."""
+    raw = f"floor(({x} - {lo}) / (({hi} - {lo}) / {sql_double(bins)}))"
+    return (
+        f"cast(CASE WHEN {hi} = {lo} THEN 0 "
+        f"ELSE least(greatest({raw}, 0), {bins - 1}) END as bigint)"
     )

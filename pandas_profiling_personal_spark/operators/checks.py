@@ -1429,6 +1429,26 @@ def _key_expr(cols: tuple[str, ...]) -> Column:
     return F.concat_ws(KEY_SEP, *parts)
 
 
+def _sql_chars(s: str) -> str:
+    """SQL expression for ``s`` built from ``chr`` codes, so control
+    characters survive whatever string-literal escaping the parser uses."""
+    return "concat(" + ", ".join(f"chr({ord(ch)})" for ch in s) + ")"
+
+
+def _key_sql(cols: tuple[str, ...]) -> str:
+    """SQL-text twin of :func:`_key_expr` (same escape, sentinel and
+    separator), for aggregates built as fragment strings. Names are
+    backtick-quoted, so dotted names reference top-level columns."""
+    esc, sep = _sql_chars(KEY_ESC), _sql_chars(KEY_SEP)
+    parts = []
+    for c in cols:
+        s = f"cast({S.sq(c)} as string)"
+        s = f"replace({s}, {esc}, {_sql_chars(KEY_ESC + KEY_ESC)})"
+        s = f"replace({s}, {sep}, {_sql_chars(KEY_ESC + KEY_SEP)})"
+        parts.append(f"coalesce({s}, {_sql_chars(NULL_SENTINEL)})")
+    return f"concat_ws({sep}, {', '.join(parts)})"
+
+
 def _key_rows(df: DataFrame, checks: list[Check]) -> DataFrame | None:
     if not checks:
         return None

@@ -102,13 +102,6 @@ def _collect_agg_groups(
     return row
 
 
-def _sq(name: str) -> str:
-    """SQL identifier quoting tolerant of dots/spaces/backticks — the SQL-text
-    twin of :func:`stats.col` (equivalence asserted in
-    tests/test_plan_quality.py::test_scalar_summary_sql_matches_column_builders)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def scalar_summary(
     df: DataFrame,
     config: ProfileConfig | None = None,
@@ -162,7 +155,7 @@ def scalar_summary(
     qlist = "array(" + ", ".join(repr(float(q)) for q in config.quantiles) + ")"
     acc = max(1, int(round(1.0 / max(config.quantile_relative_error, 1e-6))))
     for i, (name, vt) in enumerate(types.items()):
-        q = _sq(name)
+        q = S.sq(name)
         p = f"c{i}"
         frags.append(f"count({q}) AS {p}__count")
         if vt in (VT.ARRAY, VT.MAP, VT.STRUCT):
@@ -216,8 +209,8 @@ def scalar_summary(
                 f"max({q}) AS {p}__max",
                 # epoch-seconds bounds for the date histogram (A16) — avoids
                 # driver-side timezone round-trips
-                f"min(cast(unix_micros(cast({q} as timestamp)) as double) / 1e6) AS {p}__min_epoch",
-                f"max(cast(unix_micros(cast({q} as timestamp)) as double) / 1e6) AS {p}__max_epoch",
+                f"min({S.epoch_seconds_sql(q)}) AS {p}__min_epoch",
+                f"max({S.epoch_seconds_sql(q)}) AS {p}__max_epoch",
             ]
         elif vt is VT.CATEGORICAL:
             frags.append(
@@ -331,9 +324,9 @@ def _moment_pass(
             for k in ("std", "variance", "g1", "g2"):
                 row[f"{p}__{k}"] = float("nan")
             continue
-        # SQL-text build for the same Py4J-chatter reason as pass 1a; repr()
-        # round-trips the mean literal bit-exactly
-        d = f"(cast({_sq(name)} as double) - ({mean!r}))"
+        # SQL-text build for the same Py4J-chatter reason as pass 1a;
+        # sql_double round-trips the mean literal bit-exactly
+        d = f"(cast({S.sq(name)} as double) - {S.sql_double(mean)})"
         mexprs += [
             f"sum({d}) AS {p}__ms1",
             f"sum({d} * {d}) AS {p}__ms2",

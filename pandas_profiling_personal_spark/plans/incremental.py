@@ -361,10 +361,15 @@ def partial_profile(
     max_groups: int = 10_000,
     fd_pairs: "list[tuple[str, str]] | None" = None,
 ) -> PartialProfile:
-    """Profile ONE shard into a mergeable state. Three bounded actions:
-    the wide scalar+sketch aggregate, the mean-shifted power-sum pass
-    (numeric columns), and one melt+groupBy for per-column top-``top_m``
-    value counts (categorical/boolean columns; skipped if none).
+    """Profile ONE shard into a mergeable state. Up to four bounded
+    actions: the wide scalar+sketch aggregate, the mean-shifted power-sum
+    pass (numeric columns), the ``histograms`` melt (when asked), and one
+    melt+groupBy for per-column top-``top_m`` value counts
+    (categorical/boolean columns; skipped if none); ``categorical_pairs``
+    and ``group_pairs`` add one melt each. Every aggregate is built as SQL
+    fragment text (one ``selectExpr`` per action), so the driver-side plan
+    build stays a handful of Py4J calls however many columns and pairs
+    there are.
 
     ``histograms`` adds exact-mergeable histograms (one extra melt job —
     the batch ``histogram_all`` operator): a ``{col: (bins, lo, hi)}``
@@ -426,18 +431,19 @@ def partial_profile(
     num = [c for c, t in types.items() if t is VT.NUMERIC]
     cat = [c for c, t in types.items() if t in (VT.CATEGORICAL, VT.BOOLEAN)]
 
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    # SQL fragment text, one selectExpr per action (the scalar_summary
+    # pattern): each F.* call costs several Py4J round-trips, and a
+    # Column-built shard profile of 16 numeric columns sent ~54,000 of them
+    # (quadratic through the Pearson pairs), paid again on every shard.
+    # selectExpr keeps the DataFrame lineage, so cached inputs hit the cache.
+    frags = ["count(1) AS __n"]
     for i, (c, vt) in enumerate(types.items()):
         p = f"c{i}"
-        col = S.col(c)
-        aggs.append(
-            F.sum(col.isNull().cast("long")).alias(f"{p}__missing")
-        )
-        aggs.append(
-            F.hll_sketch_agg(col.cast("string"), F.lit(_HLL_LGK)).alias(
-                f"{p}__hll"
-            )
-        )
+        q = S.sq(c)
+        frags += [
+            f"sum(cast({q} IS NULL as bigint)) AS {p}__missing",
+            f"hll_sketch_agg(cast({q} as string), {_HLL_LGK}) AS {p}__hll",
+        ]
         if vt is VT.NUMERIC:
             # BATCH semantics throughout (operators/summary.py pass 1a):
             # count/mean/min/max over the raw non-null values — count
@@ -445,34 +451,35 @@ def partial_profile(
             # Spark's NaN-is-largest ordering; NaN and ±inf are counted
             # separately. Only the KLL quantile sketch masks non-finite
             # values (a sketch can't rank them).
-            dd = col.cast("double")
-            finite = ~F.isnan(dd) & ~dd.isin(float("inf"), float("-inf"))
-            aggs += [
-                F.count(dd).alias(f"{p}__count"),
-                F.avg(dd).alias(f"{p}__mean"),
-                F.min(dd).alias(f"{p}__min"),
-                F.max(dd).alias(f"{p}__max"),
-                F.sum((dd == 0).cast("long")).alias(f"{p}__zeros"),
-                F.sum(
-                    dd.isin(float("inf"), float("-inf")).cast("long")
-                ).alias(f"{p}__inf"),
-                F.sum(F.isnan(dd).cast("long")).alias(f"{p}__nan"),
-                F.count(F.when(finite, 1)).alias(f"{p}__finite"),
-                F.kll_sketch_agg_double(
-                    F.when(finite, dd), F.lit(_KLL_K)
-                ).alias(f"{p}__kll"),
+            dd = f"cast({q} as double)"
+            inf = (
+                f"{dd} IN ({S.sql_double(math.inf)}, "
+                f"{S.sql_double(-math.inf)})"
+            )
+            finite = f"NOT isnan({dd}) AND NOT ({inf})"
+            frags += [
+                f"count({dd}) AS {p}__count",
+                f"avg({dd}) AS {p}__mean",
+                f"min({dd}) AS {p}__min",
+                f"max({dd}) AS {p}__max",
+                f"sum(cast({dd} = 0 as bigint)) AS {p}__zeros",
+                f"sum(cast({inf} as bigint)) AS {p}__inf",
+                f"sum(cast(isnan({dd}) as bigint)) AS {p}__nan",
+                f"count(CASE WHEN {finite} THEN 1 END) AS {p}__finite",
+                f"kll_sketch_agg_double(CASE WHEN {finite} THEN {dd} END, "
+                f"{_KLL_K}) AS {p}__kll",
             ]
         else:
-            aggs.append(F.count(col).alias(f"{p}__count"))
+            frags.append(f"count({q}) AS {p}__count")
             if vt is VT.DATETIME:
-                aggs += [
-                    F.min(col).alias(f"{p}__min"),
-                    F.max(col).alias(f"{p}__max"),
+                frags += [
+                    f"min({q}) AS {p}__min",
+                    f"max({q}) AS {p}__max",
                     # epoch extents for first-shard histogram derivation —
                     # SQL-side conversion (S.epoch_seconds), the same rule
                     # histogram_all bins with, so no driver TZ arithmetic
-                    F.min(S.epoch_seconds(col)).alias(f"{p}__min_ep"),
-                    F.max(S.epoch_seconds(col)).alias(f"{p}__max_ep"),
+                    f"min({S.epoch_seconds_sql(q)}) AS {p}__min_ep",
+                    f"max({S.epoch_seconds_sql(q)}) AS {p}__max_ep",
                 ]
     # fd-pair sketches ride the SAME aggregate — zero extra jobs; the
     # tuple is the declared checks' injective key encoding, so NULL
@@ -481,7 +488,7 @@ def partial_profile(
     fd_plist: "list[tuple[str, str]] | None" = None
     if fd_pairs is not None:
         from pandas_profiling_personal_spark.operators.checks import (
-            _key_expr,
+            _key_sql,
         )
 
         fd_plist = sorted({tuple(sorted((a, b))) for a, b in fd_pairs})
@@ -493,13 +500,11 @@ def partial_profile(
         if any(a == b for a, b in fd_plist):
             raise ValueError("fd_pairs: self-pair")
         for k, p in enumerate(fd_plist):
-            aggs.append(
-                F.hll_sketch_agg(_key_expr(p), F.lit(_HLL_LGK)).alias(
-                    f"fd{k}__hll"
-                )
+            frags.append(
+                f"hll_sketch_agg({_key_sql(p)}, {_HLL_LGK}) AS fd{k}__hll"
             )
 
-    row = df.agg(*aggs).collect()[0].asDict()
+    row = df.selectExpr(*frags).collect()[0].asDict()
     n = int(row["__n"])
 
     cols: dict[str, ColumnState] = {}
@@ -556,13 +561,13 @@ def partial_profile(
             # 0.0 defaults claiming a constant column
             cs.m2 = cs.m3 = cs.m4 = float("nan")
             continue
-        d = S.col(c).cast("double") - F.lit(cs.m1)
+        d = f"(cast({S.sq(c)} as double) - {S.sql_double(cs.m1)})"
         p = f"m{i}"
         mexprs += [
-            F.sum(d).alias(f"{p}_1"),
-            F.sum(d * d).alias(f"{p}_2"),
-            F.sum(d * d * d).alias(f"{p}_3"),
-            F.sum(d * d * d * d).alias(f"{p}_4"),
+            f"sum({d}) AS {p}_1",
+            f"sum({d} * {d}) AS {p}_2",
+            f"sum({d} * {d} * {d}) AS {p}_3",
+            f"sum({d} * {d} * {d} * {d}) AS {p}_4",
         ]
         targets.append((p, c))
     # pairwise Pearson co-moment sums, folded into the SAME aggregate (one
@@ -584,24 +589,25 @@ def partial_profile(
             for c in num
         }
         for k, (ca, cb) in enumerate(_comb(num, 2)):
-            w = S.col(ca).isNotNull() & S.col(cb).isNotNull()
-            dx = S.col(ca).cast("double") - F.lit(shift[ca])
-            dy = S.col(cb).cast("double") - F.lit(shift[cb])
+            qa, qb = S.sq(ca), S.sq(cb)
+            w = f"CASE WHEN {qa} IS NOT NULL AND {qb} IS NOT NULL THEN"
+            dx = f"(cast({qa} as double) - {S.sql_double(shift[ca])})"
+            dy = f"(cast({qb} as double) - {S.sql_double(shift[cb])})"
             q = f"pr{k}"
             mexprs += [
-                F.count(F.when(w, 1)).alias(f"{q}_n"),
-                F.sum(F.when(w, dx)).alias(f"{q}_sx"),
-                F.sum(F.when(w, dy)).alias(f"{q}_sy"),
-                F.sum(F.when(w, dx * dx)).alias(f"{q}_sxx"),
-                F.sum(F.when(w, dy * dy)).alias(f"{q}_syy"),
-                F.sum(F.when(w, dx * dy)).alias(f"{q}_sxy"),
+                f"count({w} 1 END) AS {q}_n",
+                f"sum({w} {dx} END) AS {q}_sx",
+                f"sum({w} {dy} END) AS {q}_sy",
+                f"sum({w} {dx} * {dx} END) AS {q}_sxx",
+                f"sum({w} {dy} * {dy} END) AS {q}_syy",
+                f"sum({w} {dx} * {dy} END) AS {q}_sxy",
             ]
             pair_keys.append((ca, cb))
     pairs: dict[tuple[str, str], PairState] | None = (
         {} if correlations else None
     )
     if mexprs:
-        mrow = df.agg(*mexprs).collect()[0].asDict()
+        mrow = df.selectExpr(*mexprs).collect()[0].asDict()
         for k, (ca, cb) in enumerate(pair_keys):
             q = f"pr{k}"
             np_ = int(mrow[f"{q}_n"] or 0)
@@ -728,32 +734,25 @@ def partial_profile(
             frequencies as FQ,
         )
 
-        vc = df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("column"),
-                            S.col(c).cast("string").alias("value"),
-                        )
-                        for c in cat
-                    ]
-                )
-            ).alias("kv")
-        ).select("kv.*").where(F.col("value").isNotNull()).groupBy(
-            "column", "value"
-        ).agg(F.count(F.lit(1)).alias("count"))
+        # int-key melt (the histogram_all shape): the "column" field is
+        # the position in ``cat``, mapped back to the name driver-side
+        melt = ", ".join(
+            f"named_struct('column', {k}, 'value', cast({S.sq(c)} as string))"
+            for k, c in enumerate(cat)
+        )
+        vc = (
+            df.selectExpr(f"inline(array({melt}))")
+            .where("value IS NOT NULL")
+            .groupBy("column", "value")
+            .count()
+        )
         for r in FQ.top_k_counts(vc, top_m).collect():
-            cols[r["column"]].top_values[r["value"]] = int(r["count"])
+            cols[cat[r["column"]]].top_values[r["value"]] = int(r["count"])
 
     # optional pass 4 — contingency cells for declared categorical pairs
     # (ONE melt shuffle for all pairs — the batch contingency_all_pairs)
     cat_states: dict[tuple[str, str], ContingencyState] | None = None
     if categorical_pairs is not None:
-        from pandas_profiling_personal_spark.operators.correlations import (
-            contingency_all_pairs,
-        )
-
         missing = sorted(
             {c for p in categorical_pairs for c in p} - set(df.columns)
         )
@@ -762,15 +761,24 @@ def partial_profile(
                 f"categorical_pairs name columns not in the frame: {missing}"
             )
         plist = [tuple(p) for p in categorical_pairs]
-        exprs = {
-            c: S.col(c).cast("string") for p in plist for c in p
-        }
-        tables = contingency_all_pairs(df, exprs, plist)
+        # the batch contingency_all_pairs melt, built as SQL text
+        melt = ", ".join(
+            f"named_struct('pid', {k}, 'va', cast({S.sq(a)} as string), "
+            f"'vb', cast({S.sq(b)} as string))"
+            for k, (a, b) in enumerate(plist)
+        )
+        cells_of: dict[tuple[str, str], dict] = {p: {} for p in plist}
+        for r in (
+            df.selectExpr(f"inline(array({melt}))")
+            .where("va IS NOT NULL AND vb IS NOT NULL")
+            .groupBy("pid", "va", "vb")
+            .count()
+            .collect()
+        ):
+            cells_of[plist[r["pid"]]][(r["va"], r["vb"])] = int(r["count"])
         cat_states = {}
         for p in plist:
-            cells = {
-                (va, vb): int(cnt) for va, vb, cnt in tables[p]
-            }
+            cells = cells_of[p]
             n_full = sum(cells.values())
             capped = len(cells) > max_cells
             if capped:
@@ -796,29 +804,19 @@ def partial_profile(
             raise ValueError(
                 f"group_pairs name columns not in the frame: {missing2}"
             )
-        structs = []
-        for k, (gc, yc) in enumerate(plist2):
-            y = S.col(yc).cast("double")
-            structs.append(
-                F.struct(
-                    F.lit(k).alias("pid"),
-                    S.col(gc).cast("string").alias("g"),
-                    y.alias("y"),
-                )
-            )
+        melt = ", ".join(
+            f"named_struct('pid', {k}, 'g', cast({S.sq(gc)} as string), "
+            f"'y', cast({S.sq(yc)} as double))"
+            for k, (gc, yc) in enumerate(plist2)
+        )
         cell_rows = (
-            df.select(F.explode(F.array(*structs)).alias("kv"))
-            .select("kv.pid", "kv.g", "kv.y")
-            .where(
-                F.col("g").isNotNull()
-                & F.col("y").isNotNull()
-                & ~F.isnan(F.col("y"))
-            )
+            df.selectExpr(f"inline(array({melt}))")
+            .where("g IS NOT NULL AND y IS NOT NULL AND NOT isnan(y)")
             .groupBy("pid", "g")
             .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("y").alias("s"),
-                F.sum(F.col("y") * F.col("y")).alias("ss"),
+                F.expr("count(1) AS n"),
+                F.expr("sum(y) AS s"),
+                F.expr("sum(y * y) AS ss"),
             )
             .collect()
         )

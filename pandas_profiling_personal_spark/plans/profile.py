@@ -267,7 +267,7 @@ def profile(
         # extras fold into pass 1's SQL-built aggregate as SQL fragments
         # (equivalence with the Column builders is CI-asserted,
         # test_plan_quality.py::test_scalar_summary_sql_matches_column_builders)
-        from pandas_profiling_personal_spark.operators.summary import _sq
+        from pandas_profiling_personal_spark.functions.stats import sq
 
         if (
             "pearson" in cfg.correlations
@@ -275,7 +275,7 @@ def profile(
         ):
             pearson_pairs = list(_comb(num_cols, 2))
             for i, (a, b) in enumerate(pearson_pairs):
-                qa, qb = _sq(a), _sq(b)
+                qa, qb = sq(a), sq(b)
                 extra[f"corr_{i}"] = (
                     f"try_divide(covar_samp({qa}, {qb}), "
                     f"stddev_samp({qa}) * stddev_samp({qb}))"
@@ -284,7 +284,7 @@ def profile(
         # one boolean aggregate per string column, folded into pass 1
         cat_cols = [c for c, vt in types.items() if vt is VT.CATEGORICAL]
         for i, c in enumerate(cat_cols):
-            q = _sq(c)
+            q = sq(c)
             extra[f"datelike_{i}"] = (
                 f"(count({q}) > 0) AND "
                 f"(count(try_cast({q} as date)) = count({q}))"
@@ -308,7 +308,7 @@ def profile(
                 ]
                 for k, (a, b) in enumerate(fd_rider_pairs):
                     extra[f"fdpair_{k}"] = (
-                        f"approx_count_distinct(struct({_sq(a)}, {_sq(b)}))"
+                        f"approx_count_distinct(struct({sq(a)}, {sq(b)}))"
                     )
 
         _mark("setup_types")

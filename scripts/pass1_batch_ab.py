@@ -34,7 +34,7 @@ def main() -> None:
 
     from pandas_profiling_personal_spark.benchmarks import wide100_frame
     from pandas_profiling_personal_spark.config import ProfileConfig
-    from pandas_profiling_personal_spark.operators.summary import _sq
+    from pandas_profiling_personal_spark.functions.stats import sq
     from pandas_profiling_personal_spark.sources.readers import read_parquet
     from pandas_profiling_personal_spark.types import (
         VariableType as VT,
@@ -50,7 +50,7 @@ def main() -> None:
     types = variable_types(df)
     frags = ["count(1) AS __n"]
     for i, (name, vt) in enumerate(types.items()):
-        q = _sq(name)
+        q = sq(name)
         p = f"c{i}"
         frags.append(f"count({q}) AS {p}__count")
         if vt is VT.NUMERIC:

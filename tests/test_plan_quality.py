@@ -110,25 +110,20 @@ def test_histogram_single_scan_all_columns(spark):
         "l_discount": (10, 0.0, 0.1),
     }
     # histogram_all collects; rebuild its internal pairs plan to inspect
-    from pyspark.sql import functions as F
-
-    structs = []
+    buckets = []
     for name, (bins, lo, hi) in specs.items():
-        c = S.col(name)
-        structs.append(
-            F.struct(
-                F.lit(name).alias("column"),
-                F.when(
-                    c.isNotNull(),
-                    S.bucket_index(c.cast("double"), F.lit(lo), F.lit(hi), bins),
-                ).alias("bucket"),
-            )
+        q = S.sq(name)
+        b = S.bucket_index_sql(
+            f"cast({q} as double)", S.sql_double(lo), S.sql_double(hi), bins
         )
+        buckets.append(f"CASE WHEN {q} IS NOT NULL THEN {b} END")
     pairs = (
-        df.select(F.explode(F.array(*structs)).alias("kv"))
-        .select("kv.column", "kv.bucket")
-        .groupBy("column", "bucket")
-        .agg(F.count(F.lit(1)).alias("count"))
+        df.selectExpr(
+            f"posexplode(array({', '.join(buckets)})) AS (cid, bucket)"
+        )
+        .where("bucket IS NOT NULL")
+        .groupBy("cid", "bucket")
+        .count()
     )
     p = _plan(pairs)
     assert p.count("Scan parquet") == 2, "all histograms must share one scan"
@@ -759,6 +754,43 @@ def test_incremental_pearson_adds_no_jobs(spark):
     assert jobs[True] == jobs[False], f"correlations=True grew jobs: {jobs}"
 
 
+def test_partial_profile_py4j_chatter_bounded(spark, monkeypatch):
+    """partial_profile builds its aggregates as SQL text: one shard profile
+    of a 16-numeric-column frame with histograms and Pearson pairs must
+    send fewer than 2,000 Py4J commands. Built through the Column API it
+    sent ~54,000 (dozens per F.* call, quadratic in numeric columns through
+    the pairs) — seconds of driver time paid again on every shard."""
+    import py4j.clientserver as cs
+
+    from pandas_profiling_personal_spark.plans.incremental import (
+        partial_profile,
+    )
+
+    ids = F.col("id")
+    df = spark.range(500).select(
+        *[((ids * (k + 1)) % 97).cast("double").alias(f"x{k}")
+          for k in range(16)],
+        (ids % 7).cast("string").alias("s"),
+    ).cache()
+    try:
+        df.count()
+        sent = [0]
+        send = cs.ClientServerConnection.send_command
+
+        def counted(self, command):
+            sent[0] += 1
+            return send(self, command)
+
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+        part = partial_profile(df, histograms=10, correlations=True)
+        monkeypatch.undo()
+    finally:
+        df.unpersist()
+    assert len(part.pairs) == 120 and part.columns["x3"].hist_counts
+    assert sent[0] > 0, "Py4J calls were not counted"
+    assert sent[0] < 2000, f"partial_profile sent {sent[0]} Py4J commands"
+
+
 def test_video_near_dup_decodes_once(spark):
     """video_near_duplicates: the frame-sampling mapInPandas must execute
     ONCE — the explicit encoded-frame-id exchange is what both banded
@@ -859,23 +891,18 @@ def test_group_pairs_melt_single_exchange_no_python(spark):
     )
 
     # the melt plan itself: one shuffle, no Python (mirror the operator's
-    # construction — explode -> filter -> groupBy agg)
-    structs = [
-        F.struct(
-            F.lit(k).alias("pid"),
-            S.col(gc).cast("string").alias("g"),
-            S.col(yc).cast("double").alias("y"),
-        )
+    # SQL-text construction — inline -> filter -> groupBy agg)
+    melt = ", ".join(
+        f"named_struct('pid', {k}, 'g', cast({S.sq(gc)} as string), "
+        f"'y', cast({S.sq(yc)} as double))"
         for k, (gc, yc) in enumerate(pairs)
-    ]
+    )
     cells = (
-        li.select(F.explode(F.array(*structs)).alias("kv"))
-        .select("kv.pid", "kv.g", "kv.y")
-        .where(F.col("g").isNotNull() & F.col("y").isNotNull()
-               & ~F.isnan(F.col("y")))
+        li.selectExpr(f"inline(array({melt}))")
+        .where("g IS NOT NULL AND y IS NOT NULL AND NOT isnan(y)")
         .groupBy("pid", "g")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("s"),
-             F.sum(F.col("y") * F.col("y")).alias("ss"))
+        .agg(F.expr("count(1) AS n"), F.expr("sum(y) AS s"),
+             F.expr("sum(y * y) AS ss"))
     )
     plan = _plan(cells)
     assert plan.count("Exchange hashpartitioning") <= 2  # tree + details

@@ -1238,10 +1238,9 @@ def test_pass2_linear_matches_two_job_path_property(spark, case):
 
 
 def test_fused_pass2_fallback_without_reuse(spark):
-    """r15 (VERDICT r14 #4): with spark.sql.exchange.reuse=false the fused
-    plan would compute the un-persisted frequency table once PER BRANCH —
-    frequency_summary must fall back to the persist+two-job path, with
-    bit-equal output either way."""
+    """frequency_summary's output does not depend on
+    spark.sql.exchange.reuse: pass 2 is one linear exchange chain with no
+    exchange to reuse, so disabling reuse must give bit-equal output."""
     import datetime as dt
 
     rows = [
